@@ -1002,7 +1002,11 @@ def q46_ivf_cluster_pairs(spark, sf_dir):
     NumPy with the threshold applied in-kernel — the quadratic pair set
     never materializes as JVM rows and below-threshold pairs never cross
     the Python→JVM boundary.  Bit-identical to the JVM join+fold path
-    (kept as ``_q46_jvm`` for the parity test)."""
+    (kept as ``_q46_jvm`` for the parity test).
+
+    Memory: one cluster per ``applyInPandas`` call, O(cluster²) pairs
+    scored in that call, no spill; the frozen k=16 quantizer does not grow
+    with the corpus, so large corpora need the tiling of ROADMAP item 4."""
     emb = load(spark, sf_dir, "embeddings").select(
         F.col("vec_id").cast("bigint").alias("vec_id"), "embedding"
     )

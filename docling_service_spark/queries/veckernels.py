@@ -32,6 +32,7 @@ __all__ = [
     "assign_argmin",
     "lsh_bucket_ids",
     "pair_sims_e6",
+    "component_min_labels",
     "cosine_sim_e6",
     "double_to_long",
     "doubles_to_list_array",
@@ -41,15 +42,23 @@ _I64_MAX = np.iinfo(np.int64).max
 _I64_MIN = np.iinfo(np.int64).min
 
 
+_TWO_63 = 2.0 ** 63  # exact in float64; float(_I64_MAX) rounds up to it
+
+
 def double_to_long(x: np.ndarray) -> np.ndarray:
     """float64 → int64 with the JVM's Double.toLong semantics (NaN → 0,
-    ±inf saturates) — the exact twin of Spark's floor-result long and
-    double→bigint casts, so NaN/inf edge rows cannot silently diverge."""
+    values outside the long range — ±inf included — saturate) — the exact
+    twin of Spark's floor-result long and double→bigint casts, so NaN/inf
+    edge rows cannot silently diverge.  Saturation is by comparison against
+    ±2^63: ``astype`` would wrap out-of-range values to INT64_MIN, and a
+    ``np.clip`` to ``float(INT64_MAX)`` still overflows (that bound IS 2^63)."""
     out = np.zeros(x.shape, dtype=np.int64)
-    finite = np.isfinite(x)
-    out[finite] = x[finite].astype(np.int64)
-    out[x == np.inf] = _I64_MAX
-    out[x == -np.inf] = _I64_MIN
+    hi = x >= _TWO_63
+    lo = x < -_TWO_63
+    ok = np.isfinite(x) & ~hi & ~lo
+    out[ok] = x[ok].astype(np.int64)
+    out[hi] = _I64_MAX
+    out[lo] = _I64_MIN
     return out
 
 
@@ -159,6 +168,39 @@ def pair_sims_e6(ids: np.ndarray, N: np.ndarray, threshold_e6: int,
         z = np.zeros(0, dtype=np.int64)
         return z, z, z
     return np.concatenate(out_a), np.concatenate(out_b), np.concatenate(out_s)
+
+
+def component_min_labels(ia: np.ndarray, ib: np.ndarray,
+                         n: int) -> tuple[np.ndarray, int]:
+    """Connected components of the undirected graph on vertices ``0..n-1``
+    with edges ``(ia[k], ib[k])``.  Returns ``(lab, rounds)``: ``lab[v]`` is
+    the smallest vertex index in ``v``'s component (singletons label
+    themselves), ``rounds`` the propagation rounds run.
+
+    Min-label propagation with pointer jumping: each round lowers both
+    endpoints of every edge to the smaller label (``np.minimum.at`` in each
+    direction), then jumps every label through the fresh mapping
+    (``lab = lab[lab]``), until a round changes nothing.  ``lab[v] <= v``
+    and ``lab[v]`` stays inside ``v``'s component throughout, so the
+    fixpoint — equal labels across every edge — is the component minimum;
+    the jump makes the round count O(log diameter), not O(diameter).
+
+    Raises ``ValueError`` when an edge endpoint is not a vertex index:
+    NumPy would wrap a negative index silently and mislabel."""
+    lab = np.arange(n, dtype=np.int64)
+    rounds = 0
+    if len(ia) == 0:
+        return lab, rounds
+    if min(ia.min(), ib.min()) < 0 or max(ia.max(), ib.max()) >= n:
+        raise ValueError(f"edge endpoints missing from vertices 0..{n - 1}")
+    while True:
+        rounds += 1
+        prev = lab.copy()
+        np.minimum.at(lab, ia, lab[ib])
+        np.minimum.at(lab, ib, lab[ia])
+        lab = lab[lab]
+        if np.array_equal(lab, prev):
+            return lab, rounds
 
 
 def cosine_sim_e6(P: np.ndarray, C: np.ndarray) -> np.ndarray:

@@ -59,18 +59,6 @@ def get_spark(
     )
     if shuffle_partitions is not None:
         builder = builder.config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-    # Parquet row-group size for OUR writes (r9, guide §2.5/§6): documents
-    # are atomic multi-100-KB rows, and the default 128 MB row group makes a
-    # 130 MB corpus file ONE row group — unsplittable, so a clustered-giant
-    # file becomes a single straggler task no matter the split size
-    # (measured: the sf1 skew table wrote 15000 rows/1 row group per file;
-    # the direct scan ran 62% of the work in one task).  ~4 MB groups keep
-    # every file splittable at a granularity where bytes ∝ extraction work,
-    # which is what lets size-based splitting defuse clustered giants
-    # WITHOUT the salted shuffle.  Env-overridable for deployments.
-    builder = builder.config(
-        "spark.hadoop.parquet.block.size",
-        os.environ.get("SPARK_GRAFT_PARQUET_BLOCK_BYTES", str(4 * 1024 * 1024)))
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
@@ -78,7 +66,7 @@ def get_spark(
     # stock 128 MB: builder.config would override a spark-submit --conf
     # (measured — an explicit 16m pin from scaling_bench.py would silently
     # become this default), so an already-pinned value always wins.  4 MB
-    # splits match the row-group size above: a multi-row-group file spreads
+    # splits match the row-group size below: a multi-row-group file spreads
     # across tasks in proportion to bytes, and bytes track extraction work.
     # Local default; cluster deployments scanning ordinary relational
     # tables should override (see OPTIMIZATION_r09.md — at PB scale coarse
@@ -88,4 +76,23 @@ def get_spark(
     if conf is not None and conf.get("spark.sql.files.maxPartitionBytes") == "134217728b":
         conf.set("spark.sql.files.maxPartitionBytes",
                  os.environ.get("SPARK_GRAFT_MAX_PARTITION_BYTES", "4m"))
+    # Parquet row-group size for OUR writes (r9, guide §2.5/§6): documents
+    # are atomic multi-100-KB rows, and the default 128 MB row group makes a
+    # 130 MB corpus file ONE row group — unsplittable, so a clustered-giant
+    # file becomes a single straggler task no matter the split size
+    # (measured: the sf1 skew table wrote 15000 rows/1 row group per file;
+    # the direct scan ran 62% of the work in one task).  ~4 MB groups keep
+    # every file splittable at a granularity where bytes ∝ extraction work,
+    # which is what lets size-based splitting defuse clustered giants
+    # WITHOUT the salted shuffle.  Same post-create, only-if-unset rule as
+    # the split size: a spark-submit --conf spark.hadoop.parquet.block.size
+    # lands in the Hadoop conf at context start and wins.  Env-overridable
+    # for deployments.
+    sc = getattr(spark, "sparkContext", None)  # absent on test fakes
+    if sc is not None:
+        hconf = sc._jsc.hadoopConfiguration()
+        if hconf.get("parquet.block.size") is None:
+            hconf.set("parquet.block.size",
+                      os.environ.get("SPARK_GRAFT_PARQUET_BLOCK_BYTES",
+                                     str(4 * 1024 * 1024)))
     return spark

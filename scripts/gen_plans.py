@@ -134,15 +134,13 @@ PLAN_NOTES = [
      "JVM rows.  cluster stays the vector table's natural partition key, "
      "so at scale the single Exchange is the co-location shuffle."),
     ("q43_embedding_near_dup_keepers",
-     "Connected-component keepers: the plan below is a bare checkpoint scan "
-     "BY DESIGN — each pointer-jumping round ends in one materializing "
-     "localCheckpoint (or parquet spill with checkpoint_dir=), so the "
-     "returned labels never drag the iterative join chain behind them; "
-     "per-round cost is 2 bounded joins + 1 aggregate on uniform keys (r9: "
-     "self-loop edges fold the own-vs-neighbor least into the aggregation, "
-     "the jump composes the CURRENT round's mapping, and the convergence "
-     "count rides the checkpoint's own Observation), O(log diameter) "
-     "rounds."),
+     "Connected-component keepers in q42's plan shape: MapInArrow buckets "
+     "every vector, ONE Exchange on bucket, and one applyInPandas per bucket "
+     "that scores the bucket's pairs and labels its components in NumPy "
+     "(min-label propagation with pointer jumping) — no iteration through "
+     "the engine, no checkpoint.  Exact because the single LSH table puts "
+     "each vector in one bucket and pairs never cross buckets, so no "
+     "component does either."),
     ("q51_frame_sample",
      "Frame sampling: columnar scan feeds mapInPandas directly — the 1-to-"
      "many fan-out (variable rows per video) happens INSIDE the Arrow "

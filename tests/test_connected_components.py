@@ -1,262 +1,131 @@
-"""Scale guards on the q43 connected-components loop (round-2 verdict item 5
-+ advice): pointer jumping converges in O(log diameter) rounds, every round's
-labels are localCheckpoint-materialized (bounded lineage), and non-convergence
-raises instead of silently returning wrong keepers."""
+"""q43's near-dup keepers: the per-bucket label kernel
+(``veckernels.component_min_labels``) on hand-built graphs, the pandas-level
+bucket kernel on a clique of identical vectors, and one Spark run of q43 on
+a hand-built embeddings table checked against ``ORACLE_Q43`` in DuckDB."""
 
 from __future__ import annotations
 
-import pytest
-from pyspark.sql import functions as F
+import numpy as np
+import pandas as pd
 
-from docling_service_spark.queries.similarity import connected_components
-
-
-def _pairs(spark, edges):
-    return spark.createDataFrame(edges, "id_a bigint, id_b bigint")
-
-
-def _verts(spark, n):
-    return spark.range(n).select(F.col("id").alias("vec_id"))
+from docling_service_spark.queries import similarity as sim
+from docling_service_spark.queries.veckernels import (
+    component_min_labels,
+    lsh_bucket_ids,
+)
 
 
-def test_chain_of_10_converges_logarithmically(spark):
+def _labels(edges, n):
+    ia = np.array([a for a, _ in edges], dtype=np.int64)
+    ib = np.array([b for _, b in edges], dtype=np.int64)
+    return component_min_labels(ia, ib, n)
+
+
+def test_chain_of_10_converges_logarithmically():
     # Path graph 0-1-2-...-9: diameter 9.  Plain propagation needs ~9 rounds;
     # pointer jumping must finish in <= ceil(log2(9)) + 2 = 6.
-    labels, rounds = connected_components(
-        _verts(spark, 10), _pairs(spark, [(i, i + 1) for i in range(9)])
-    )
+    lab, rounds = _labels([(i, i + 1) for i in range(9)], 10)
     assert rounds <= 6, f"pointer jumping should be O(log diameter), took {rounds}"
-    got = {r.vec_id: r.keeper_id for r in labels.collect()}
-    assert got == {i: 0 for i in range(10)}
+    assert lab.tolist() == [0] * 10
 
 
-def test_two_components_and_singletons(spark):
-    labels, _ = connected_components(
-        _verts(spark, 7), _pairs(spark, [(1, 2), (2, 3), (5, 6)])
-    )
-    got = {r.vec_id: r.keeper_id for r in labels.collect()}
-    assert got == {0: 0, 1: 1, 2: 1, 3: 1, 4: 4, 5: 5, 6: 5}
+def test_long_chain_in_reverse_edge_order():
+    # Edge order must not matter; 2^16 vertices stay within ~log2 rounds.
+    n = 1 << 16
+    lab, rounds = component_min_labels(
+        np.arange(n - 1)[::-1].copy(), np.arange(1, n)[::-1].copy(), n)
+    assert rounds <= 20
+    assert not lab.any()
 
 
-def test_non_convergence_raises(spark):
-    with pytest.raises(RuntimeError, match="did not converge"):
-        connected_components(
-            _verts(spark, 40),
-            _pairs(spark, [(i, i + 1) for i in range(39)]),
-            max_rounds=1,
-        )
+def test_two_components_and_singletons():
+    lab, _ = _labels([(1, 2), (2, 3), (5, 6)], 7)
+    assert lab.tolist() == [0, 1, 1, 1, 4, 5, 5]
 
 
-def test_reliable_checkpoint_dir_identical_labels(spark, tmp_path):
-    """checkpoint_dir= (the cluster fault-tolerance path, round-3 verdict
-    item #6) must produce byte-identical labels and the same round count as
-    the localCheckpoint default, with per-round parquet actually written."""
-    verts = _verts(spark, 12)
-    edges = [(i, i + 1) for i in range(5)] + [(8, 9), (9, 10)]
-    base, rounds_a = connected_components(verts, _pairs(spark, edges))
-    rel_dir = str(tmp_path / "cc")
-    rel, rounds_b = connected_components(
-        verts, _pairs(spark, edges), checkpoint_dir=rel_dir
-    )
-    assert rounds_a == rounds_b
-    got_a = {r.vec_id: r.keeper_id for r in base.collect()}
-    got_b = {r.vec_id: r.keeper_id for r in rel.collect()}
-    assert got_a == got_b
-    import os
-
-    steps = sorted(d for d in os.listdir(rel_dir) if d.startswith("step-"))
-    # Superseded rounds are pruned as soon as the next round's spill lands
-    # (r4 advice): only the edge pin + the final round's step survive.
-    assert rounds_b >= 2, "graph too shallow to exercise pruning"
-    assert steps == ["step-001", f"step-{rounds_b + 1:03d}"], steps
-    # the returned labels remain usable after the source DataFrames are gone
-    # (they scan the spill, not executor blocks)
-    plan = rel._jdf.queryExecution().optimizedPlan().toString()
-    assert "Relation" in plan or "LogicalRDD" in plan
-    assert "Join" not in plan
+def test_hub_star():
+    # Hub 5 joined to every other vertex: one component labelled 0.
+    lab, rounds = _labels([(i, 5) for i in range(5)] + [(5, i) for i in range(6, 12)], 12)
+    assert lab.tolist() == [0] * 12
+    assert rounds <= 3
 
 
-def test_cluster_master_auto_derives_spill_dir_and_reclaims_it(spark, tmp_path, monkeypatch):
-    """r6 verdict #6 + advice r7: a non-local master past the safe-round
-    threshold must ENGAGE the spill when a shared-FS dir is derivable (here
-    via spark.docling.cc.checkpointDir) — and because the derived dir is
-    internal cliff-avoidance (the caller passed checkpoint_dir=None), it
-    must be RECLAIMED before returning, with the path surfaced in telemetry
-    and the returned labels still fully usable (re-pinned to blocks)."""
-    import os
-
-    from docling_service_spark.queries import similarity as sim
-
-    monkeypatch.setattr(sim, "_is_local_master", lambda sc: False)
-    monkeypatch.setattr(sim, "_LOCAL_CK_SAFE_ROUNDS", 1)
-    base = str(tmp_path / "shared")
-    spark.conf.set("spark.docling.cc.checkpointDir", base)
-    tele: dict = {}
-    try:
-        labels, rounds = connected_components(
-            _verts(spark, 10), _pairs(spark, [(i, i + 1) for i in range(9)]),
-            telemetry=tele,
-        )
-    finally:
-        spark.conf.unset("spark.docling.cc.checkpointDir")
-    # Labels consumable AFTER the spill dir is gone (localCheckpoint re-pin).
-    assert {r.vec_id: r.keeper_id for r in labels.collect()} == {i: 0 for i in range(10)}
-    assert tele["spill_dir_source"] == "derived"
-    assert tele["spill_dir"].startswith(base + "/_cc_spill/")
-    assert tele["spill_dir_reclaimed"] is True
-    assert not os.path.exists(tele["spill_dir"])  # nothing leaks under the warehouse
-    # The _cc_spill parent may remain (other loops could share it), but this
-    # loop's unique subdir and every step file inside it are gone.
-    if os.path.exists(os.path.join(base, "_cc_spill")):
-        assert os.listdir(os.path.join(base, "_cc_spill")) == []
+def test_empty_edge_set():
+    lab, rounds = _labels([], 4)
+    assert lab.tolist() == [0, 1, 2, 3]
+    assert rounds == 0
+    assert component_min_labels(np.zeros(0, np.int64), np.zeros(0, np.int64), 0)[0].size == 0
 
 
-def test_local_guard_trip_reclaims_scratch_and_prunes_first_step(spark, monkeypatch):
-    """Mid-loop guard trip with checkpoint_dir=None (advice r7 #2): the edge
-    pin was localCheckpointed, so the FIRST spilled step is a superseded
-    labels round and must be pruned once step-002 lands (pin-step tracking,
-    not a hardcoded step-001 exemption); the scratch dir itself is reclaimed
-    before returning."""
-    import os
-
-    from docling_service_spark.queries import similarity as sim
-
-    monkeypatch.setattr(sim, "_LOCAL_CK_SAFE_ROUNDS", 1)
-    seen_steps: list[list[str]] = []
-    orig_read = type(spark.read).parquet
-
-    def spy_read(reader, path, *a, **kw):
-        # Each spilled round reads its own step back right after writing it —
-        # snapshot the dir listing at that moment to observe pruning live.
-        if "/cc-spill-" in path:
-            seen_steps.append(sorted(os.listdir(os.path.dirname(path))))
-        return orig_read(reader, path, *a, **kw)
-
-    monkeypatch.setattr(type(spark.read), "parquet", spy_read)
-    tele: dict = {}
-    labels, rounds = connected_components(
-        _verts(spark, 10), _pairs(spark, [(i, i + 1) for i in range(9)]),
-        telemetry=tele,
-    )
-    assert {r.vec_id: r.keeper_id for r in labels.collect()} == {i: 0 for i in range(10)}
-    assert tele["spill_dir_source"] == "local-scratch"
-    assert tele["spill_dir_reclaimed"] is True
-    assert not os.path.exists(tele["spill_dir"])
-    # Spilled rounds happened (guard tripped) and by the time step-003 was
-    # read back, step-001 — a superseded labels round, NOT the edge pin —
-    # had been pruned.
-    assert len(seen_steps) >= 3, seen_steps
-    assert "step-001" in seen_steps[0]
-    assert "step-001" not in seen_steps[2], seen_steps
+def test_identical_vectors_bucket_is_one_clique():
+    # One bucket of identical vectors: every pair is a near-dup (a clique),
+    # so every row's keeper is the bucket's minimum vec_id.
+    ids = [41, 7, 19, 3, 88, 12]
+    v = np.linspace(-1.0, 1.0, sim.DIM, dtype=np.float32)
+    pdf = pd.DataFrame({"vec_id": ids, "bucket": 0, "embedding": [v.copy() for _ in ids]})
+    out = sim._near_dup_keepers(pdf)
+    assert sorted(out["vec_id"]) == sorted(ids)
+    assert set(out["keeper_id"]) == {3}
 
 
-def test_cluster_master_warns_once_without_derivable_dir(spark, monkeypatch):
-    """No conf key and a file:-scheme warehouse dir (executors can't share a
-    driver-local path): stay on localCheckpoint, warn exactly ONCE (advice
-    r6 — the old code warned on every round past the threshold)."""
-    import warnings as _warnings
-
-    from docling_service_spark.queries import similarity as sim
-
-    monkeypatch.setattr(sim, "_is_local_master", lambda sc: False)
-    monkeypatch.setattr(sim, "_LOCAL_CK_SAFE_ROUNDS", 1)
-    with _warnings.catch_warnings(record=True) as rec:
-        _warnings.simplefilter("always")
-        labels, rounds = connected_components(
-            _verts(spark, 10), _pairs(spark, [(i, i + 1) for i in range(9)])
-        )
-    assert {r.vec_id: r.keeper_id for r in labels.collect()} == {i: 0 for i in range(10)}
-    assert rounds > 2  # several rounds ran past the threshold...
-    hits = [w for w in rec if "spill dir could be derived" in str(w.message)]
-    assert len(hits) == 1  # ...but the warning fired once
-
-
-def test_derive_cluster_spill_dir_rules():
-    """Pure derivation rules: explicit conf wins at any scheme; warehouse
-    qualifies only with a non-file scheme; otherwise None."""
-    from docling_service_spark.queries.similarity import _derive_cluster_spill_dir
-
-    class _Conf:
-        def __init__(self, d):
-            self._d = d
-
-        def get(self, k, default=None):
-            return self._d.get(k, default)
-
-    class _Spark:
-        def __init__(self, d):
-            self.conf = _Conf(d)
-
-    got = _derive_cluster_spill_dir(_Spark(
-        {"spark.docling.cc.checkpointDir": "hdfs://nn/tmp/cc"}))
-    assert got.startswith("hdfs://nn/tmp/cc/_cc_spill/")
-
-    got = _derive_cluster_spill_dir(_Spark(
-        {"spark.sql.warehouse.dir": "s3a://bucket/warehouse/"}))
-    assert got.startswith("s3a://bucket/warehouse/_cc_spill/")
-
-    assert _derive_cluster_spill_dir(_Spark(
-        {"spark.sql.warehouse.dir": "file:/home/driver/spark-warehouse"})) is None
-    assert _derive_cluster_spill_dir(_Spark({})) is None
-
-    # Explicit key may even be a plain path (operator's choice).
-    got = _derive_cluster_spill_dir(_Spark(
-        {"spark.docling.cc.checkpointDir": "/mnt/shared",
-         "spark.sql.warehouse.dir": "file:/x"}))
-    assert got.startswith("/mnt/shared/_cc_spill/")
+def _chain_table(rng):
+    """Embeddings where vec_ids [14, 11, 17, 10, 16, 12, 15, 13] form a chain
+    in ONE bucket: x_k = c·u + e_k + e_(k+1) with e_* orthonormal and
+    orthogonal to u and to every hyperplane, so every chain vector projects
+    like u (same bucket), neighbours have cosine 0.6 and non-neighbours 0.2
+    (below the 0.35 cut).  Keeper 10 is reachable from 14 only over 3 hops.
+    Random vectors (ids >= 20) and one near-identical pair (30, 31) fill
+    the other buckets."""
+    W = np.array([[sim.hyperplane_weights(i, j) for j in range(sim.N_PLANES)]
+                  for i in range(sim.DIM)], dtype=np.float64)
+    u = W @ np.ones(sim.N_PLANES)
+    u /= np.linalg.norm(u)
+    # Orthonormal basis of the complement of span(W's columns, u).
+    q, _ = np.linalg.qr(np.column_stack([W, u, rng.standard_normal((sim.DIM, 12))]))
+    e = q[:, sim.N_PLANES + 1:].T
+    chain_ids = [14, 11, 17, 10, 16, 12, 15, 13]
+    rows = {vid: np.sqrt(0.5) * u + e[k] + e[k + 1] for k, vid in enumerate(chain_ids)}
+    for vid in range(20, 30):
+        rows[vid] = rng.standard_normal(sim.DIM)
+    base = rng.standard_normal(sim.DIM)
+    rows[30] = base
+    rows[31] = base + 0.01 * rng.standard_normal(sim.DIM)
+    ids = sorted(rows)
+    X = np.array([rows[i] for i in ids], dtype=np.float32)
+    return chain_ids, ids, X, W
 
 
-def test_bounded_lineage_via_checkpoint(spark):
-    # The returned labels plan must be rooted at a checkpoint scan, not the
-    # full iterative join chain: lineage depth stays O(1) per round.
-    labels, _ = connected_components(
-        _verts(spark, 10), _pairs(spark, [(i, i + 1) for i in range(9)])
-    )
-    plan = labels._jdf.queryExecution().optimizedPlan().toString()
-    assert "LogicalRDD" in plan or "ExistingRDD" in plan, plan
-    assert "Join" not in plan, f"labels should be checkpoint-rooted, got:\n{plan}"
+def test_q43_multi_hop_chain_in_one_bucket_matches_oracle(spark, tmp_path):
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
 
+    chain_ids, ids, X, W = _chain_table(np.random.default_rng(7))
+    buckets = dict(zip(ids, lsh_bucket_ids(X.astype(np.float64), W)))
+    assert len({buckets[i] for i in chain_ids}) == 1  # one bucket by construction
 
-def test_densify_pairs_labels_identical_fewer_rounds(spark):
-    """densify_pairs (r9) must not change components — only cut rounds.
-    Chain of 24: raw diameter 23; densified distance-2 edges halve it."""
-    from docling_service_spark.queries.similarity import densify_pairs
+    pq.write_table(pa.table({
+        "vec_id": pa.array(ids, pa.int64()),
+        "embedding": pa.array([list(r) for r in X], pa.list_(pa.float32())),
+        "label": pa.array([0] * len(ids), pa.int32()),
+    }), str(tmp_path / "embeddings.parquet"))
 
-    verts = _verts(spark, 24)
-    chain = _pairs(spark, [(i, i + 1) for i in range(23)])
-    base, rounds_a = connected_components(verts, chain)
-    dense, rounds_b = connected_components(verts, densify_pairs(chain))
-    got_a = {r.vec_id: r.keeper_id for r in base.collect()}
-    got_b = {r.vec_id: r.keeper_id for r in dense.collect()}
-    assert got_a == got_b == {i: 0 for i in range(24)}
-    assert rounds_b <= rounds_a
+    # Only chain neighbours clear the threshold: the component is multi-hop.
+    pairs = sim.q42_lsh_bucketed_neighbors(spark, str(tmp_path)).collect()
+    chain = set(chain_ids)
+    near = {(r.id_a, r.id_b) for r in pairs
+            if r.id_a in chain and r.id_b in chain and r.sim_e6 >= sim.NEAR_DUP_SIM_E6}
+    assert len(near) == len(chain_ids) - 1
 
-
-def test_densify_pairs_labels_identical_mixed_graph(spark):
-    """Mixed shapes (chain + triangle + star + singletons): byte-identical
-    labels with and without densification."""
-    from docling_service_spark.queries.similarity import densify_pairs
-
-    edges = ([(i, i + 1) for i in range(5)]          # chain 0-5
-             + [(7, 8), (8, 9), (7, 9)]              # triangle
-             + [(11, j) for j in range(12, 17)])     # star hub 11
-    verts = _verts(spark, 20)
-    base, _ = connected_components(verts, _pairs(spark, edges))
-    dense, _ = connected_components(verts, densify_pairs(_pairs(spark, edges)))
-    assert ({r.vec_id: r.keeper_id for r in base.collect()}
-            == {r.vec_id: r.keeper_id for r in dense.collect()})
-
-
-def test_densify_degree_cap_excludes_hubs(spark, monkeypatch):
-    """A middle vertex above the degree cap contributes NO squared pairs
-    (the blowup guard) — components still come out right because the hub's
-    own edges stay."""
-    from docling_service_spark.queries import similarity as sim
-
-    monkeypatch.setattr(sim, "DENSIFY_MAX_MID_DEGREE", 3)
-    star = [(0, j) for j in range(1, 6)]  # hub 0, degree 5 > cap 3
-    dense = sim.densify_pairs(_pairs(spark, star))
-    rows = sorted((r.id_a, r.id_b) for r in dense.collect())
-    assert rows == sorted(star)  # no (leaf, leaf) pairs added through the hub
-    labels, _ = connected_components(_verts(spark, 6), dense)
-    assert {r.vec_id: r.keeper_id for r in labels.collect()} == {i: 0 for i in range(6)}
+    got = sorted(tuple(r) for r in
+                 sim.q43_embedding_near_dup_keepers(spark, str(tmp_path)).collect())
+    con = duckdb.connect()
+    con.sql(f"CREATE VIEW embeddings AS SELECT * FROM "
+            f"read_parquet('{tmp_path / 'embeddings.parquet'}')")
+    want = sorted(con.sql(sim.ORACLE_Q43).fetchall())
+    con.close()
+    assert got == want
+    keepers = dict(got)
+    assert {keepers[i] for i in chain_ids} == {10}
+    assert keepers[31] == keepers[30]
+    assert len(got) == len(ids)

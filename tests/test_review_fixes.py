@@ -7,11 +7,12 @@ from __future__ import annotations
 import os
 import time
 
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
 from docling_service_spark.corpus import _FAMILY_EXT, build_doc, source_meta
-from docling_service_spark.queries.similarity import connected_components
+from docling_service_spark.queries.veckernels import component_min_labels
 from docling_service_spark.schemas import INPUT_SCHEMA_WITH_SOURCE
 from docling_service_spark.sparkio.checkpoint import (
     SnapshotStore,
@@ -128,11 +129,11 @@ def test_source_extension_matches_family():
         assert (src["original_name"] or src["value"]).endswith(ext)
 
 
-def test_connected_components_rejects_dangling_endpoints(spark):
-    verts = spark.range(3).select(F.col("id").alias("vec_id"))
-    pairs = spark.createDataFrame([(1, 99)], "id_a bigint, id_b bigint")
-    with pytest.raises(ValueError, match="missing from vertices"):
-        connected_components(verts, pairs)
+def test_connected_components_rejects_dangling_endpoints():
+    # vertices 0..2; an edge to 99 (past the end) or -1 (would wrap) is dangling
+    for ia, ib in (([1], [99]), ([-1], [2])):
+        with pytest.raises(ValueError, match="missing from vertices"):
+            component_min_labels(np.array(ia, np.int64), np.array(ib, np.int64), 3)
 
 
 def test_oracle_q60_zip_import_guard(monkeypatch):

@@ -64,12 +64,14 @@ def test_lsh_pairs_arrow_matches_jvm(spark):
 
 
 def test_lsh_pairs_kernel_threshold_matches_post_filter(spark):
-    """q43's in-kernel near-dup threshold == filtering the q42 output."""
+    """The group kernel's in-kernel near-dup threshold (the edge set q43
+    labels) == filtering the q42 output."""
     emb = load(spark, SF_DIR, "embeddings")
     filtered = sim.lsh_bucketed_pairs(emb, n_planes=sim.N_PLANES).filter(
         F.col("sim_e6") >= sim.NEAR_DUP_SIM_E6)
-    pushed = sim.lsh_bucketed_pairs(emb, n_planes=sim.N_PLANES,
-                                    min_sim_e6=sim.NEAR_DUP_SIM_E6)
+    pushed = sim._bucketed(emb, sim.N_PLANES).groupBy("bucket").applyInPandas(
+        sim._make_group_pairs_fn(sim.NEAR_DUP_SIM_E6, None),
+        schema="id_a long, id_b long, sim_e6 long")
     assert _rows(pushed) == _rows(filtered)
 
 
@@ -100,15 +102,21 @@ def test_cosine_score_kernel_matches_jvm_expr(spark):
 
 
 def test_double_to_long_jvm_semantics():
-    """NaN→0, ±inf saturation — the Double.toLong rule the kernels apply
-    before thresholds so edge rows cannot diverge from the JVM filter."""
+    """NaN→0, out-of-range saturation (±inf included) — the Double.toLong
+    rule the kernels apply before thresholds so edge rows cannot diverge
+    from the JVM filter."""
     import numpy as np
 
     from docling_service_spark.queries.veckernels import double_to_long
 
-    x = np.array([np.nan, np.inf, -np.inf, -2.0, 0.0, 3.9e5])
+    hi, lo = np.iinfo(np.int64).max, np.iinfo(np.int64).min
+    x = np.array([np.nan, np.inf, -np.inf, -2.0, 0.0, 3.9e5,
+                  1e19, -1e19, 2.0 ** 63, -2.0 ** 63, 2.0 ** 62])
     out = double_to_long(x)
     assert out[0] == 0
-    assert out[1] == np.iinfo(np.int64).max
-    assert out[2] == np.iinfo(np.int64).min
-    assert list(out[3:]) == [-2, 0, 390000]
+    assert out[1] == hi
+    assert out[2] == lo
+    assert list(out[3:6]) == [-2, 0, 390000]
+    # Finite values outside the long range saturate like Double.toLong;
+    # -2^63 is exactly INT64_MIN and 2^62 is in range.
+    assert list(out[6:]) == [hi, lo, hi, lo, 1 << 62]
